@@ -24,9 +24,24 @@ It replaces, Spark-natively, the reference's warehouse mechanics:
 Layout::
 
     <root>/
-      data/v<version>/_pb=<bucket>/part-*.parquet
+      data/v<claim>/_pb=<bucket>/part-*.parquet
       _snapshots/v<version>.json      # immutable manifest
+      _snapshots/v<version>.json.claim  # version id allocation marker
       _HEAD                           # atomic pointer: current version
+
+Two writers feed one record-based commit (:meth:`LakeTable.commit`):
+
+* the JVM writer (appends, compaction, rebucket, rollup, tombstone GC)
+  writes a DataFrame with ``partitionBy`` and re-reads the written
+  files once for their stats — parquet-mr writes timestamps as INT96
+  with no footer statistics;
+* the SPJ merge kernel (operators/merge_spj.py) claims a version,
+  writes each merged bucket with pyarrow under ``data/v<claim>`` and
+  returns the files' stats itself.
+
+Both hand the publish core the same :class:`FileRecord` list (path,
+rows, event-time bounds, tombstone count); the manifest's per-file
+bounds and per-bucket tombstone stats are built from the records.
 
 Scale design (100 TB, 1000 executors)
 -------------------------------------
@@ -40,9 +55,9 @@ Scale design (100 TB, 1000 executors)
   listing of the whole table, no partition discovery job.
 * Manifests are O(n_buckets x files-per-bucket) JSON — thousands of
   entries, driver-side trivial (same shape as an Iceberg manifest list).
-* Files are clustered on the event-time column at write
-  (sortWithinPartitions) and the manifest records per-file [min, max]
-  event-time bounds, so a time-range read prunes to a slice of each
+* Both writers cluster files on the event-time column and the
+  manifest records per-file [min, max] event-time bounds, so a
+  time-range read prunes to a slice of each
   bucket instead of scanning it whole — the successor of the
   reference's SP-GiST/stbox window indexes
   (/root/reference/etl/init/sql/31_fact_cell.sql:35).
@@ -66,7 +81,8 @@ import urllib.parse
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Iterable
+from datetime import datetime
+from typing import Iterable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,7 +93,42 @@ BUCKET_COL = "_bucket"
 # with _deleted=true are retained delete markers, hidden from default
 # reads, arbitrated like live rows by MERGE, GC'd by expire_tombstones.
 DELETED_COL = "_deleted"
-_PARTITION_DIR_COL = "_pb"  # directory-layout twin of BUCKET_COL
+PARTITION_DIR_COL = "_pb"  # directory-layout twin of BUCKET_COL
+
+
+class FileRecord(NamedTuple):
+    """One data file a commit publishes, with the metrics the manifest
+    keeps about it (the shape of Iceberg's DataFile-with-metrics).
+
+    ``path`` is relative to the table root. ``ts_min``/``ts_max`` bound
+    the commit's event-time column (both None: the file holds only
+    null event times); ``n_tombstones``/``min_tombstone_ts`` count the
+    delete markers in the file (None: the table has no tombstone
+    column). ``rows is None`` means no stats are known for the file:
+    it gets no time bounds and leaves its bucket's tombstone state
+    unknown."""
+
+    bucket: int
+    path: str
+    rows: int | None = None
+    ts_min: datetime | None = None
+    ts_max: datetime | None = None
+    n_tombstones: int | None = None
+    min_tombstone_ts: datetime | None = None
+
+
+# Spark-side twin of FileRecord: the row shape a writer job returns.
+FILE_RECORD_SCHEMA = T.StructType(
+    [
+        T.StructField("bucket", T.IntegerType(), False),
+        T.StructField("path", T.StringType(), False),
+        T.StructField("rows", T.LongType(), True),
+        T.StructField("ts_min", T.TimestampType(), True),
+        T.StructField("ts_max", T.TimestampType(), True),
+        T.StructField("n_tombstones", T.LongType(), True),
+        T.StructField("min_tombstone_ts", T.TimestampType(), True),
+    ]
+)
 
 
 class CommitConflictError(RuntimeError):
@@ -121,7 +172,7 @@ class Snapshot:
     # /root/reference/etl/init/sql/31_fact_cell.sql:35):
     # {"col": <event-time col>, "files": {rel_path: [min-iso-or-null,
     # max-iso-or-null]}}. Written files are clustered on the event-time
-    # column (sortWithinPartitions at commit), so the bounds are tight;
+    # column by both writers, so the bounds are tight;
     # ``read(time_range=...)`` skips files whose bounds fall outside
     # the window. [null, null] = the file holds ONLY null-event-time
     # rows (prunable by ANY range predicate, which excludes nulls); a
@@ -170,8 +221,14 @@ class LakeTable:
     def _snap_path(self, version: int) -> str:
         return os.path.join(self.root, "_snapshots", f"v{version:06d}.json")
 
+    @staticmethod
+    def data_prefix(version: int) -> str:
+        """Root-relative directory the files of the commit that claimed
+        ``version`` live under (``data/v<version>``)."""
+        return f"data/v{version:06d}"
+
     def _data_dir(self, version: int) -> str:
-        return os.path.join(self.root, "data", f"v{version:06d}")
+        return os.path.join(self.root, self.data_prefix(version))
 
     # -- lifecycle ---------------------------------------------------------
     @staticmethod
@@ -251,7 +308,7 @@ class LakeTable:
     def applied_epochs(self) -> set[int]:
         return set(self.snapshot().applied_epochs)
 
-    def _claim_version(self) -> int:
+    def claim_version(self) -> int:
         """Atomically allocate a version id ABOVE every existing
         snapshot AND every outstanding claim, not head+1.
 
@@ -264,7 +321,11 @@ class LakeTable:
         O_EXCL fails and it moves to the next id. A crashed writer's
         leftover claim permanently skips that number, which is exactly
         the never-reuse rule. Claims cost one inode each; they are
-        removed with their snapshot by expire_snapshots."""
+        removed with their snapshot by expire_snapshots.
+
+        A writer that writes its own files (the SPJ merge kernel) claims
+        first, writes under :meth:`data_prefix` of the claim, and hands
+        the claim to :meth:`commit` with its file records."""
         snap_dir = os.path.join(self.root, "_snapshots")
         v = (
             max(
@@ -318,21 +379,18 @@ class LakeTable:
         written: dict[str, list[str]],
         event_time_col: str,
         schema: T.StructType,
-    ) -> tuple[dict[str, list] | None, dict[str, list] | None]:
-        """ONE column-pruned scan over the just-written files producing
-        both manifest stat families:
+    ) -> list[FileRecord] | None:
+        """File records for files the JVM writer just wrote, from ONE
+        column-pruned scan over them: per file the row count, the
+        [min, max] event time and the tombstone count and min event
+        time. parquet-mr writes timestamps as INT96 with no footer
+        statistics, so the bounds cannot come from the footers.
 
-        * per-bucket ``[tombstone count, min tombstone event time]``
-          (lets expire_tombstones prune its discovery scan) — None when
-          the table carries no tombstone column;
-        * per-file ``[min event time, max event time]`` (lets
-          ``read(time_range=...)`` skip files) — None when the event
-          column is missing or non-temporal.
-
-        Sized by the epoch's write, not the table; the driver result is
-        bounded by the number of files written (per-file grouping via
-        ``input_file_name()``, mapped back to manifest-relative paths
-        driver-side)."""
+        None when the event column is missing or non-temporal. A file
+        the ``input_file_name()`` -> relative-path mapping misses (e.g.
+        a root reached through a symlink) gets a stats-unknown record,
+        which leaves its bucket's tombstone state unknown. Sized by the
+        write, not the table."""
         rel_paths = [p for plist in written.values() for p in plist]
         et_field = next(
             (f for f in schema.fields if f.name == event_time_col), None
@@ -342,7 +400,7 @@ class LakeTable:
             or not isinstance(et_field.dataType, (T.TimestampType, T.DateType))
             or not rel_paths
         ):
-            return None, None
+            return None
         has_tomb = any(f.name == DELETED_COL for f in schema.fields)
         fields = [T.StructField(event_time_col, et_field.dataType, True)]
         if has_tomb:
@@ -358,6 +416,7 @@ class LakeTable:
         rows = (
             df.groupBy(F.input_file_name().alias("f"))
             .agg(
+                F.count(F.lit(1)).alias("n"),
                 F.min(event_time_col).alias("mn"),
                 F.max(event_time_col).alias("mx"),
                 F.sum(dead.cast("long")).alias("n_dead"),
@@ -369,33 +428,56 @@ class LakeTable:
         for r in rows:
             path = urllib.parse.unquote(urllib.parse.urlparse(r["f"]).path)
             by_rel[os.path.relpath(path, self.root)] = r
-        file_stats = {
-            rel: [
-                r["mn"].isoformat() if r["mn"] is not None else None,
-                r["mx"].isoformat() if r["mx"] is not None else None,
-            ]
-            for rel, r in by_rel.items()
-        }
-        if not has_tomb:
-            return None, file_stats
-        bucket_stats: dict[str, list] = {}
+        records = []
         for bucket, paths in written.items():
-            n, mn = 0, None
-            # A path the URI->relpath mapping failed to recover (e.g. a
-            # root reached through a symlink) must leave this bucket
-            # UNKNOWN — recording [0, None] would claim "known clean"
-            # and permanently exclude the bucket from tombstone-GC
-            # discovery. (Empty data files never exist: partitionBy
-            # writes no file for an empty partition.)
-            if any(p not in by_rel for p in paths):
-                continue
             for p in paths:
-                r = by_rel[p]
-                n += int(r["n_dead"] or 0)
-                dm = r["dead_mn"]
-                if dm is not None and (mn is None or dm < mn):
-                    mn = dm
-            bucket_stats[bucket] = [n, mn.isoformat() if mn is not None else None]
+                r = by_rel.get(p)
+                if r is None:
+                    records.append(FileRecord(int(bucket), p))
+                    continue
+                records.append(
+                    FileRecord(
+                        int(bucket),
+                        p,
+                        int(r["n"]),
+                        r["mn"],
+                        r["mx"],
+                        int(r["n_dead"] or 0) if has_tomb else None,
+                        r["dead_mn"],
+                    )
+                )
+        return records
+
+    @staticmethod
+    def _record_stats(
+        records: list[FileRecord],
+    ) -> tuple[dict[str, list], dict[str, list]]:
+        """The manifest stat families of a set of file records:
+        per-bucket ``[tombstone count, min tombstone event time]`` for
+        buckets whose every file has known tombstone stats, and per-file
+        ``[min event time, max event time]`` for files with known
+        stats (ISO strings, None for null)."""
+
+        def iso(t):
+            return t.isoformat() if t is not None else None
+
+        file_stats = {
+            r.path: [iso(r.ts_min), iso(r.ts_max)]
+            for r in records
+            if r.rows is not None
+        }
+        by_bucket: dict[str, list[FileRecord]] = {}
+        for r in records:
+            by_bucket.setdefault(str(r.bucket), []).append(r)
+        bucket_stats = {}
+        for bucket, recs in by_bucket.items():
+            if any(r.rows is None or r.n_tombstones is None for r in recs):
+                continue  # one unknown file leaves the bucket unknown
+            mins = [r.min_tombstone_ts for r in recs if r.min_tombstone_ts is not None]
+            bucket_stats[bucket] = [
+                sum(r.n_tombstones for r in recs),
+                iso(min(mins)) if mins else None,
+            ]
         return bucket_stats, file_stats
 
     @staticmethod
@@ -404,12 +486,12 @@ class LakeTable:
         written: dict[str, list[str]],
         touched_buckets: Iterable[int] | None,
         overwrite_all: bool,
-        written_stats: dict[str, list] | None,
+        written_stats: dict[str, list],
         event_time_col: str | None,
     ) -> dict:
         """Next snapshot's tombstone_stats: carry forward untouched
-        buckets, drop replaced buckets (unknown unless recomputed),
-        overlay the just-written buckets' fresh stats."""
+        buckets, drop replaced and written buckets (unknown unless
+        recomputed), overlay the written buckets' known stats."""
         head_stats = head.tombstone_stats or {}
         # a caller naming the event-time column adopts it even when the
         # write produced no files (e.g. GC emptied the last marker)
@@ -419,14 +501,9 @@ class LakeTable:
         buckets: dict = {}
         if not overwrite_all and head_stats.get("col") == col:
             buckets.update(head_stats.get("buckets", {}))
-        for b in touched_buckets or []:
+        for b in list(touched_buckets or []) + list(written):
             buckets.pop(str(b), None)
-        if written_stats is not None:
-            buckets.update(written_stats)
-        else:
-            # rewritten without a stats pass -> state unknown, must scan
-            for b in written:
-                buckets.pop(b, None)
+        buckets.update(written_stats)
         return {"col": col, "buckets": buckets}
 
     @staticmethod
@@ -584,130 +661,208 @@ class LakeTable:
         return self.read(spark).count()
 
     # -- write --------------------------------------------------------------
-    def _write_data(
+    def _write_records(
         self,
         df: DataFrame,
         version: int,
-        already_partitioned: bool = False,
-        sort_col: str | None = None,
+        schema: T.StructType,
+        event_time_col: str | None,
         max_records_per_file: int | None = None,
-    ) -> dict[str, list[str]]:
-        """Write ``df`` (must carry BUCKET_COL) under data/v<version>,
-        one directory per bucket; returns bucket -> relative file paths.
+    ) -> list[FileRecord]:
+        """JVM writer: write ``df`` (must carry BUCKET_COL) under
+        data/v<version>, one directory per bucket, and return the
+        written files as records (stats from :meth:`_scan_write_stats`;
+        unknown when no event-time column is named or it is not
+        temporal).
 
         ``repartition(BUCKET_COL)`` + ``partitionBy`` keeps one shuffle
         and writes each bucket's rows contiguously (at 100 TB this is
         the same write shape Iceberg's fanout writer produces). The
         bucket column is stored both physically (for file-list reads)
         and as the partition dir (for humans / external tools).
-        ``already_partitioned``: the producer guarantees each bucket's
-        rows live in one task partition (e.g. the grouped-map SPJ
-        merge) — skip the extra shuffle.
 
-        ``sort_col``: cluster each bucket's rows on this column before
-        writing (``sortWithinPartitions`` — per-task sort, no shuffle;
-        SURVEY §4.2 item 4's "(domain, warc_ts) clustering"). Paired
-        with ``max_records_per_file`` (Iceberg's target-file-size
+        ``event_time_col``: cluster each bucket's rows on this column
+        before writing (``sortWithinPartitions`` — per-task sort, no
+        shuffle; SURVEY §4.2 item 4's "(domain, warc_ts) clustering").
+        Paired with ``max_records_per_file`` (Iceberg's target-file-size
         analog) a big bucket splits into consecutive event-time chunks,
         so the manifest's per-file bounds prune time-range reads to a
         slice of the bucket — and row groups inside each file carry
         tight parquet min/max for predicate pushdown either way.
         """
         out_dir = self._data_dir(version)
-        with_dir = df.withColumn(_PARTITION_DIR_COL, F.col(BUCKET_COL))
-        if not already_partitioned:
-            with_dir = with_dir.repartition(F.col(BUCKET_COL))
-        if sort_col is not None and sort_col in df.columns:
+        with_dir = df.withColumn(PARTITION_DIR_COL, F.col(BUCKET_COL)).repartition(
+            F.col(BUCKET_COL)
+        )
+        if event_time_col is not None and event_time_col in df.columns:
             with_dir = with_dir.sortWithinPartitions(
-                _PARTITION_DIR_COL, sort_col
+                PARTITION_DIR_COL, event_time_col
             )
         writer = with_dir.write.mode("overwrite")
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-        writer.partitionBy(_PARTITION_DIR_COL).parquet(out_dir)
-        files: dict[str, list[str]] = {}
+        writer.partitionBy(PARTITION_DIR_COL).parquet(out_dir)
+        written: dict[str, list[str]] = {}
         for entry in os.listdir(out_dir):
-            if not entry.startswith(f"{_PARTITION_DIR_COL}="):
+            if not entry.startswith(f"{PARTITION_DIR_COL}="):
                 continue
             bucket = entry.split("=", 1)[1]
             rel_dir = os.path.relpath(os.path.join(out_dir, entry), self.root)
-            files[bucket] = sorted(
+            written[bucket] = sorted(
                 os.path.join(rel_dir, f)
                 for f in os.listdir(os.path.join(out_dir, entry))
                 if f.endswith(".parquet")
             )
-        return files
+        records = None
+        if event_time_col is not None and written:
+            records = self._scan_write_stats(
+                df.sparkSession, written, event_time_col, schema
+            )
+        if records is None:
+            records = [
+                FileRecord(int(b), p) for b, paths in written.items() for p in paths
+            ]
+        return records
+
+    def _drop_unlisted(self, version: int, records: list[FileRecord]) -> None:
+        """Delete every file under data/v<version> the records do not
+        list: leftovers of failed or retried writer task attempts, which
+        no snapshot may ever reference."""
+        listed = {r.path for r in records}
+        for dirpath, _dirs, names in os.walk(self._data_dir(version)):
+            for name in names:
+                full = os.path.join(dirpath, name)
+                if os.path.relpath(full, self.root) not in listed:
+                    os.remove(full)
 
     def commit(
         self,
-        new_data: DataFrame | None,
+        new_data: DataFrame | list[FileRecord] | None,
         *,
+        version: int | None = None,
         touched_buckets: Iterable[int] | None = None,
         schema: T.StructType | None = None,
         applied_epoch: int | None = None,
         summary: dict | None = None,
         overwrite_all: bool = False,
-        already_bucket_partitioned: bool = False,
         n_buckets: int | None = None,
         event_time_col: str | None = None,
         max_records_per_file: int | None = None,
     ) -> Snapshot:
-        """Write ``new_data`` (with BUCKET_COL) and commit a snapshot.
+        """Commit a snapshot that publishes ``new_data``'s files.
+
+        Two writers feed the one record-based publish:
+
+        * a DataFrame (with BUCKET_COL) is written here by the JVM
+          writer under a fresh claim, and converted to file records by
+          the stats scan (:meth:`_scan_write_stats`);
+        * a list of :class:`FileRecord` describes files the caller
+          already wrote under ``data_prefix(version)``, where
+          ``version`` is the caller's :meth:`claim_version` (the SPJ
+          merge kernel). Files under that directory the records do not
+          list are deleted before publishing.
+
+        ``new_data=None`` is a metadata-only commit (schema evolution,
+        empty epochs).
 
         ``touched_buckets``: buckets whose files are replaced by the new
         data; untouched buckets carry forward (bucket-granular
         copy-on-write). ``overwrite_all`` replaces every bucket.
-        Metadata-only commits (schema evolution) pass ``new_data=None``.
-        ``event_time_col``: when given, written files are CLUSTERED on
-        that column (per-bucket sortWithinPartitions) and the manifest
-        records their per-file [min, max] bounds — what makes
-        ``read(time_range=...)`` prune — plus, if the table carries the
-        tombstone column, per-bucket tombstone stats so
-        expire_tombstones can prune its discovery scan; without it the
-        written files carry no bounds and the written buckets'
-        tombstone state is marked unknown. ``max_records_per_file``
-        splits a big bucket into several time-consecutive files
-        (tighter pruning; Iceberg's target-file-size knob).
+        ``event_time_col``: the column the records' bounds are over.
+        The manifest then records per-file [min, max] bounds — what
+        makes ``read(time_range=...)`` prune — plus, if the table
+        carries the tombstone column, per-bucket tombstone stats so
+        expire_tombstones can prune its discovery scan; the JVM writer
+        also CLUSTERS its files on that column (per-bucket
+        sortWithinPartitions). Without it the written files carry no
+        bounds and the written buckets' tombstone state is marked
+        unknown. ``max_records_per_file`` splits a big bucket into
+        several time-consecutive files on the JVM writer (tighter
+        pruning; Iceberg's target-file-size knob).
         """
         head = self.snapshot()
         if applied_epoch is not None and applied_epoch in head.applied_epochs:
             return head  # exactly-once: epoch already applied
-        # The spec the caller bucketed ``new_data`` against; a rebase
-        # onto a head with a DIFFERENT spec is never safe (see below).
-        base_n_buckets = head.n_buckets
-        base_key_cols = list(head.key_cols)
-        version = self._claim_version()
-        if new_data is not None:
-            written = self._write_data(
+        if isinstance(new_data, DataFrame):
+            version = self.claim_version()
+            records = self._write_records(
                 new_data,
                 version,
-                already_partitioned=already_bucket_partitioned,
-                sort_col=event_time_col,
-                max_records_per_file=max_records_per_file,
+                schema or head.schema,
+                event_time_col,
+                max_records_per_file,
             )
         else:
-            written = {}
-        written_stats, written_file_stats = None, None
-        if new_data is not None and event_time_col is not None and written:
-            written_stats, written_file_stats = self._scan_write_stats(
-                new_data.sparkSession,
-                written,
-                event_time_col,
-                schema or head.schema,
-            )
-        # Optimistic-concurrency publish loop (the Iceberg commit
-        # protocol shape): data files are written once above; the
-        # metadata (files dict, epochs, parent) is rebuilt against the
-        # current head on every attempt, so a lost race rebases instead
-        # of silently clobbering the winner's snapshot.
-        while True:
-            if overwrite_all:
-                files = written
+            records = list(new_data or [])
+            if version is None:
+                if records:
+                    raise ValueError(
+                        "file records need the claimed version their files "
+                        "were written under"
+                    )
+                version = self.claim_version()
             else:
-                files = dict(head.files)
-                for b in touched_buckets or []:
-                    files.pop(str(b), None)
-                files.update(written)
+                self._drop_unlisted(version, records)
+        return self._publish_records(
+            head,
+            version,
+            records,
+            touched_buckets=touched_buckets,
+            schema=schema,
+            applied_epoch=applied_epoch,
+            summary=summary or {},
+            overwrite_all=overwrite_all,
+            n_buckets=n_buckets,
+            event_time_col=event_time_col,
+        )
+
+    def _publish_records(
+        self,
+        head: Snapshot,
+        version: int,
+        records: list[FileRecord],
+        *,
+        touched_buckets: Iterable[int] | None = None,
+        schema: T.StructType | None = None,
+        applied_epoch: int | None = None,
+        summary: dict,
+        overwrite_all: bool = False,
+        extend: bool = False,
+        n_buckets: int | None = None,
+        event_time_col: str | None = None,
+    ) -> Snapshot:
+        """The publish core every commit goes through: build the next
+        snapshot from ``head`` plus the file records, and publish it
+        with the optimistic-concurrency loop (the Iceberg commit
+        protocol shape). Data files are written once, before this; the
+        metadata (files, epochs, parent) is rebuilt against the current
+        head on every attempt, so a lost race rebases instead of
+        silently clobbering the winner's snapshot.
+
+        ``extend``: the records ADD files to their buckets (appends)
+        instead of replacing the buckets' file lists; appended buckets'
+        tombstone state becomes unknown."""
+        written: dict[str, list[str]] = {}
+        for r in records:
+            written.setdefault(str(r.bucket), []).append(r.path)
+        for paths in written.values():
+            paths.sort()
+        bucket_stats, file_stats = (
+            self._record_stats(records) if event_time_col else ({}, {})
+        )
+        tomb_col = event_time_col
+        if extend:
+            bucket_stats, tomb_col = {}, None
+        # The spec the caller bucketed its data against; a rebase onto a
+        # head with a DIFFERENT spec is never safe (see below).
+        base_n_buckets = head.n_buckets
+        base_key_cols = list(head.key_cols)
+        while True:
+            files = {} if overwrite_all else dict(head.files)
+            for b in touched_buckets or []:
+                files.pop(str(b), None)
+            for b, paths in written.items():
+                files[b] = (files.get(b, []) if extend else []) + paths
             epochs = list(head.applied_epochs)
             if applied_epoch is not None:
                 epochs.append(applied_epoch)
@@ -719,18 +874,18 @@ class LakeTable:
                 n_buckets=n_buckets or head.n_buckets,
                 files=files,
                 applied_epochs=sorted(epochs),
-                summary=summary or {},
+                summary=summary,
                 committed_at=time.time(),
                 tombstone_stats=self._merge_tombstone_stats(
                     head,
                     written,
                     touched_buckets,
                     overwrite_all,
-                    written_stats,
-                    event_time_col,
+                    bucket_stats,
+                    tomb_col,
                 ),
                 file_stats=self._merge_file_stats(
-                    head, files, written_file_stats, event_time_col
+                    head, files, file_stats, event_time_col
                 ),
             )
             if self._publish(snap):
@@ -771,7 +926,8 @@ class LakeTable:
             # Write-write conflict: the winner changed a bucket this
             # commit is about to replace — its rows were merged
             # against a stale current-side read, so a rebase would
-            # silently drop the winner's changes. Fail loudly.
+            # silently drop the winner's changes. Fail loudly. (Appends
+            # only extend file lists, so they never clash.)
             clashed = [
                 b
                 for b in (touched_buckets or [])
@@ -787,7 +943,7 @@ class LakeTable:
             # fresh id so snapshot versions stay monotone with commit
             # order (the claimed data dir's files remain referenced by
             # their recorded relative paths)
-            version = self._claim_version()
+            version = self.claim_version()
 
     def append(
         self,
@@ -804,68 +960,25 @@ class LakeTable:
         ``compact_files``. ``event_time_col``: cluster the appended
         files on that column and record their per-file [min, max]
         bounds (``read(time_range=...)`` then skips whole appends
-        outside the window — the append-table pruning story)."""
+        outside the window — the append-table pruning story). A lost
+        commit race always rebases (no overlap is possible) unless the
+        winner changed the bucketing spec."""
         head = self.snapshot()
-        version = self._claim_version()
+        version = self.claim_version()
         with_bucket = df.withColumn(
             BUCKET_COL, bucket_expr(head.key_cols, head.n_buckets)
         )
-        written = self._write_data(
-            with_bucket,
-            version,
-            sort_col=event_time_col,
-            max_records_per_file=max_records_per_file,
+        records = self._write_records(
+            with_bucket, version, head.schema, event_time_col, max_records_per_file
         )
-        written_file_stats = None
-        if event_time_col is not None and written:
-            _, written_file_stats = self._scan_write_stats(
-                df.sparkSession, written, event_time_col, head.schema
-            )
-        # Appends only EXTEND file lists, so a lost commit race always
-        # rebases cleanly onto the winner's head (no overlap possible)
-        # — UNLESS the winner changed the bucketing spec, in which case
-        # these files were hashed under the old layout and pruned reads
-        # would look for their keys in the wrong bucket.
-        base_n_buckets = head.n_buckets
-        base_key_cols = list(head.key_cols)
-        while True:
-            files = dict(head.files)
-            for bucket, paths in written.items():
-                files.setdefault(bucket, [])
-                files[bucket] = files[bucket] + paths
-            snap = Snapshot(
-                version=version,
-                parent=head.version,
-                schema_json=head.schema_json,
-                key_cols=head.key_cols,
-                n_buckets=head.n_buckets,
-                files=files,
-                applied_epochs=list(head.applied_epochs),
-                summary=summary or {"operation": "append"},
-                committed_at=time.time(),
-                # appended buckets' tombstone state becomes unknown
-                tombstone_stats=self._merge_tombstone_stats(
-                    head, written, None, False, None, None
-                ),
-                file_stats=self._merge_file_stats(
-                    head, files, written_file_stats, event_time_col
-                ),
-            )
-            if self._publish(snap):
-                return snap
-            head = self.snapshot()
-            if (
-                head.n_buckets != base_n_buckets
-                or head.key_cols != base_key_cols
-            ):
-                raise CommitConflictError(
-                    f"concurrent commit v{head.version} changed the "
-                    f"bucket spec ({base_n_buckets} x {base_key_cols} -> "
-                    f"{head.n_buckets} x {head.key_cols}) while this "
-                    "append's data was bucketed under the old one; "
-                    "re-append against the new head"
-                )
-            version = self._claim_version()
+        return self._publish_records(
+            head,
+            version,
+            records,
+            summary=summary or {"operation": "append"},
+            extend=True,
+            event_time_col=event_time_col,
+        )
 
     # -- schema evolution -----------------------------------------------------
     def add_columns(self, new_fields: list[T.StructField]) -> Snapshot:
@@ -886,7 +999,7 @@ class LakeTable:
 
     # -- maintenance ------------------------------------------------------------
     def expire_snapshots(
-        self, keep_last: int = 2, orphan_grace_s: float = 3600.0
+        self, keep_last: int = 2, orphan_grace_s: float = 86400.0
     ) -> list[int]:
         """GC data directories only reachable from expired snapshots.
         (Iceberg's expire_snapshots analog; keeps time travel shallow.)
@@ -900,9 +1013,10 @@ class LakeTable:
         forever. A claim below HEAD with no snapshot json is such an
         orphan; ``orphan_grace_s`` protects a still-in-flight writer
         (its eventual snapshot may reference its claim's data dir by
-        relative path) — only claims older than the grace are swept,
-        and only files unreferenced by every surviving snapshot are
-        deleted (Iceberg's remove_orphan_files age guard)."""
+        relative path) — only claims with no write activity for longer
+        than the grace are swept, and only files unreferenced by every
+        surviving snapshot are deleted (Iceberg's remove_orphan_files
+        age guard; the 24 h default leaves room for a long write)."""
         versions = self.versions()
         head = self.head_version()
         # keep_last=0 must mean "only what HEAD needs" — a bare
@@ -937,7 +1051,13 @@ class LakeTable:
     ) -> None:
         """Remove aged claims below HEAD that no snapshot was ever
         published under, plus their data files that no surviving
-        snapshot references (see expire_snapshots docstring)."""
+        snapshot references (see expire_snapshots docstring).
+
+        A claim's age runs from its last write activity: the newest
+        mtime of the claim file and of everything under its
+        data/v<claim> directory. A writer claims before it writes, so
+        aging from the claim alone would let a long write outlive the
+        grace and lose its files to the sweep before it publishes."""
         snap_dir = os.path.join(self.root, "_snapshots")
         now = time.time()
         for entry in os.listdir(snap_dir):
@@ -945,13 +1065,11 @@ class LakeTable:
                 continue
             v = int(entry[1:].split(".", 1)[0])
             claim = os.path.join(snap_dir, entry)
-            if (
-                v >= head
-                or os.path.exists(self._snap_path(v))
-                or now - os.path.getmtime(claim) < grace_s
-            ):
+            if v >= head or os.path.exists(self._snap_path(v)):
                 continue
             data_dir = self._data_dir(v)
+            if now - self._last_activity(claim, data_dir) < grace_s:
+                continue
             if os.path.isdir(data_dir):
                 for dirpath, _dirs, names in os.walk(data_dir, topdown=False):
                     for name in names:
@@ -962,6 +1080,17 @@ class LakeTable:
                     if not os.listdir(dirpath):
                         os.rmdir(dirpath)
             os.remove(claim)
+
+    @staticmethod
+    def _last_activity(claim: str, data_dir: str) -> float:
+        """Newest mtime of a claim file and of every directory and file
+        under its data directory."""
+        newest = os.path.getmtime(claim)
+        for dirpath, _dirs, names in os.walk(data_dir):
+            newest = max(newest, os.path.getmtime(dirpath))
+            for name in names:
+                newest = max(newest, os.path.getmtime(os.path.join(dirpath, name)))
+        return newest
 
     def compact_files(
         self, spark: SparkSession, max_files: int = 64, rebucket: bool = False
@@ -1008,11 +1137,10 @@ class LakeTable:
                 return self.commit(
                     df,
                     overwrite_all=True,
-                    # NOT already-partitioned: the repartition(BUCKET_COL)
-                    # inside _write_data is what collapses each bucket to
-                    # one file. Recompute tombstone stats under the column
-                    # already on record so the full rewrite doesn't reset
-                    # GC pruning.
+                    # the repartition(BUCKET_COL) inside _write_records is
+                    # what collapses each bucket to one file. Recompute
+                    # tombstone stats under the column already on record
+                    # so the full rewrite doesn't reset GC pruning.
                     event_time_col=(snap.tombstone_stats or {}).get("col")
                     or (snap.file_stats or {}).get("col"),
                     summary={
@@ -1036,7 +1164,7 @@ class LakeTable:
         grouped-map merge and the touched-list loses pruning power —
         so growth has to be a supported lifecycle operation, not a
         table rebuild. One shuffle (repartition by the new bucket in
-        _write_data); tombstones ride along (include_deleted), so
+        _write_records); tombstones ride along (include_deleted), so
         late-event arbitration survives the migration; applied-epoch
         bookkeeping is untouched, so replay/resume still works. NOTE:
         derived tables keyed by this table's bucket ids (the rollup's

@@ -16,8 +16,10 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 import etl_spark
 from etl_spark.lake.table import LakeTable
@@ -122,7 +124,18 @@ class LineageLog:
         ]
         if missing:
             self.table.add_columns(missing)
-        df = spark.createDataFrame(self.rows, LINEAGE_SCHEMA)
+        # From an Arrow table, not a list of tuples: the list path
+        # pickles the rows through a Python-RDD job (Python-worker
+        # tasks per flush); the Arrow table ships to the JVM as-is.
+        arrow_schema = to_arrow_schema(LINEAGE_SCHEMA)
+        columns = list(zip(*self.rows))
+        df = spark.createDataFrame(
+            pa.Table.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+                schema=arrow_schema,
+            ),
+            LINEAGE_SCHEMA,
+        )
         import pyspark.sql.functions as F
 
         self.table.append(

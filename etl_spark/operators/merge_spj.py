@@ -3,9 +3,12 @@
 The baseline merge (operators/merge.py) shuffles the epoch payload three
 times: LWW groupBy (hash by key), full-outer join vs current (hash by
 key again), and the write repartition (hash by bucket). This variant
-collapses them into ONE payload shuffle:
+collapses them into ONE payload shuffle, and the kernel writes the
+merged buckets itself:
 
-    delta.groupBy(bucket).applyInPandas(merge_bucket) -> write
+    claim version v
+    delta.groupBy(bucket).applyInPandas(merge_bucket) -> file records
+    table.commit(records, version=v)
 
 Inside the grouped-map kernel (one call per bucket, Arrow-batched):
   1. LWW winner per key (vectorized sort + drop_duplicates keep-last —
@@ -13,22 +16,35 @@ Inside the grouped-map kernel (one call per bucket, Arrow-batched):
   2. html -> text extraction for winners only (the SAME frozen kernel,
      functions/extract.extract_text_series — byte-identity preserved);
   3. executor-local pyarrow read of the bucket's CURRENT parquet files
-     (the manifest's file list rides the closure) — a hand-rolled
+     (the manifest's file list rides a broadcast) — a hand-rolled
      storage-partitioned join: current rows never cross a shuffle,
-     exactly what Iceberg SPJ gives co-bucketed tables. The read goes
-     through a pyarrow FileSystem seam (:func:`_resolve_filesystem`):
-     a POSIX root reads locally, a ``s3://``/``hdfs://`` root reads
-     via the store's client — no kernel change to leave shared disk;
+     exactly what Iceberg SPJ gives co-bucketed tables. Both INT96
+     (JVM-written) and INT64 (kernel-written) timestamps are read.
+     Current rows whose key is not in the delta stay in Arrow; only
+     the touched ones go through pandas;
   4. row arbitration identical to the JVM merge: delta wins iff no
-     current row or delta.warc_ts >= current.warc_ts; 'D' winners drop
-     the key; untouched current rows carry through (the whole bucket is
-     rewritten, so losers must be re-emitted).
+     current row or it is >= on the (warc_ts, seq) tuple; a winning
+     'D' leaves a tombstone; touched current rows that win stay;
+  5. the whole bucket, sorted on event time (nulls first, as the JVM
+     writer's sortWithinPartitions), is written with pyarrow.parquet
+     to ``data/v<v>/_pb=<bucket>/`` and the kernel returns one file
+     record: (bucket, path, rows, ts_min, ts_max, n_tombstones,
+     min_tombstone_ts).
 
-The output is already partitioned by bucket (the one shuffle), so the
-lake write skips its repartition. Hot keys: when the stats pre-pass
-sees a key above threshold, a JVM salted pre-reduce runs BEFORE the
-grouped map so no pandas group ever materializes a hot key's full row
-set.
+Reads and writes go through a pyarrow FileSystem seam
+(:func:`_resolve_filesystem`): a POSIX root uses the local disk, a
+``s3://``/``hdfs://`` root the store's client — no kernel change to
+leave shared disk.
+
+Only the file records come back to the driver: the rewritten bucket
+never crosses the Python->JVM boundary, the JVM neither sorts nor
+re-encodes it, and the commit takes the bounds and tombstone stats
+from the records instead of re-reading the written files. The commit
+deletes any file under ``data/v<v>`` that no record lists (leftovers
+of failed task attempts) before it publishes. Hot keys: when the stats
+pre-pass sees a key above threshold, a JVM salted pre-reduce runs
+BEFORE the grouped map so no pandas group ever materializes a hot
+key's full row set.
 
 Memory contract: one call holds one bucket's delta winners + current
 rows. n_buckets is the knob — size it so bucket ~ O(100 MB) at the
@@ -37,15 +53,29 @@ target scale (thousands of buckets at 100 TB).
 
 from __future__ import annotations
 
+import uuid
 from typing import Iterable
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from etl_spark.functions.extract import extract_text_series
-from etl_spark.lake.table import BUCKET_COL, DELETED_COL, LakeTable, bucket_expr
+from etl_spark.lake.table import (
+    BUCKET_COL,
+    DELETED_COL,
+    FILE_RECORD_SCHEMA,
+    PARTITION_DIR_COL,
+    FileRecord,
+    LakeTable,
+    bucket_expr,
+)
 from etl_spark.operators.dedup import salted_lww_dedup
 from etl_spark.operators.merge import MergeStats, evolve_for_delta
 
@@ -123,6 +153,96 @@ def _resolve_filesystem(root: str):
     return pafs.LocalFileSystem(), root
 
 
+def _write_schema(schema: T.StructType):
+    """Arrow schema of the kernel's data files: the table's payload
+    columns plus BUCKET_COL, every field nullable, timestamps as
+    ``timestamp[us, UTC]`` (INT64 micros — Spark cannot read
+    nanosecond parquet timestamps)."""
+    full = T.StructType(
+        schema.fields + [T.StructField(BUCKET_COL, T.IntegerType(), False)]
+    )
+    arrow = to_arrow_schema(full)
+    return pa.schema([f.with_nullable(True) for f in arrow])
+
+
+def _conform(table, schema):
+    """Cast a current-side file's table to the write schema: INT96
+    (Spark-written) and INT64 (kernel-written) timestamps both become
+    ``timestamp[us, UTC]``, columns an old file predates read as null,
+    and null booleans (pre-tombstone files) read as False."""
+    cols = []
+    for f in schema:
+        if f.name in table.column_names:
+            col = table[f.name].cast(f.type)
+        else:
+            col = pa.nulls(table.num_rows, f.type)
+        if pa.types.is_boolean(f.type):
+            col = pc.fill_null(col, False)
+        cols.append(col)
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def _key_mask(cur, keys, key_cols: list[str]):
+    """Boolean mask over ``cur`` rows whose key appears in ``keys``."""
+    rid = pa.array(np.arange(cur.num_rows, dtype=np.int64))
+    hit = (
+        cur.select(key_cols)
+        .append_column("__rid", rid)
+        .join(keys, key_cols, join_type="left semi", use_threads=False)
+    )
+    return pc.is_in(rid, value_set=hit["__rid"].combine_chunks())
+
+
+def _parquet_options(table, key_cols: list[str], order_cols: list[str]) -> dict:
+    """Writer options that keep kernel files no larger than Spark's:
+    dictionary encoding only where it pays (at most one distinct value
+    per two rows — high-cardinality columns stay PLAIN, as parquet-mr's
+    dictionary fallback leaves them), and no min/max statistics on
+    variable-length payload columns (nothing prunes on them; keys and
+    order columns keep theirs)."""
+    dictionary, stats = [], []
+    for f in table.schema:
+        col = table[f.name]
+        if pc.count_distinct(col).as_py() * 2 <= table.num_rows:
+            dictionary.append(f.name)
+        var_len = pa.types.is_binary(f.type) or pa.types.is_string(f.type)
+        if not var_len or f.name in key_cols or f.name in order_cols:
+            stats.append(f.name)
+    return {
+        "use_dictionary": dictionary,
+        "write_statistics": stats,
+        "compression": "snappy",
+        "store_schema": False,
+    }
+
+
+def _file_record(bucket: int, path: str, table, ts_col: str) -> dict:
+    """The commit's file record for a written table (see
+    lake.table.FileRecord). Timestamps leave as naive UTC, which Spark
+    reads back in the session's (UTC) zone."""
+
+    def naive(scalar):
+        v = scalar.as_py()
+        return v.replace(tzinfo=None) if v is not None else None
+
+    ts = table[ts_col]
+    bounds = pc.min_max(ts)
+    rec = {
+        "bucket": bucket,
+        "path": path,
+        "rows": table.num_rows,
+        "ts_min": naive(bounds["min"]),
+        "ts_max": naive(bounds["max"]),
+        "n_tombstones": None,
+        "min_tombstone_ts": None,
+    }
+    if DELETED_COL in table.column_names:
+        dead = pc.fill_null(table[DELETED_COL], False)
+        rec["n_tombstones"] = pc.sum(dead.cast(pa.int64())).as_py() or 0
+        rec["min_tombstone_ts"] = naive(pc.min(pc.filter(ts, dead)))
+    return rec
+
+
 def make_bucket_merger(
     root: str,
     files_by_bucket,
@@ -130,18 +250,26 @@ def make_bucket_merger(
     key_cols: list[str],
     order_cols: list[str],
     extracted: bool,
+    out_dir: str,
 ):
-    """Build the grouped-map kernel.
+    """Build the grouped-map kernel: merge one bucket, write it under
+    ``<root>/<out_dir>/_pb=<bucket>/`` and return its file record (one
+    row of lake.table.FILE_RECORD_SCHEMA).
 
     ``files_by_bucket`` is either a plain dict (tests) or a Spark
     Broadcast of one (the pipeline path): a torrent-distributed
     broadcast ships the manifest to each executor ONCE instead of
     serializing it into every task closure — the difference between
     O(tasks x manifest) and O(executors x manifest) bytes when the
-    table has millions of bucket-file entries."""
+    table has millions of bucket-file entries.
+
+    Only current rows whose key is in the delta go through pandas;
+    the rest of the bucket stays in Arrow from read to write."""
     payload_cols = [f.name for f in schema.fields]
     out_cols = payload_cols + [BUCKET_COL]
+    write_schema = _write_schema(schema)
     ts_col = order_cols[0]
+    record_cols = [f.name for f in FILE_RECORD_SCHEMA.fields]
 
     def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         files_map = (
@@ -150,7 +278,7 @@ def make_bucket_merger(
             else files_by_bucket
         )
         if pdf.empty:
-            return pd.DataFrame(columns=out_cols)
+            return pd.DataFrame(columns=record_cols)
         bucket = int(pdf[BUCKET_COL].iloc[0])
 
         # 1. LWW winners (keep-last over the ascending order tuple).
@@ -190,56 +318,66 @@ def make_bucket_merger(
                 winners[c] = None
 
         # 3. executor-local read of the bucket's current rows (through
-        # the filesystem seam: POSIX root or object-store URI).
+        # the filesystem seam: POSIX root or object-store URI). Rows
+        # whose key the delta does not touch stay in Arrow; only the
+        # touched ones go to pandas for arbitration.
+        filesystem, base = _resolve_filesystem(root)
         paths = files_map.get(str(bucket), [])
-        if paths:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            filesystem, base = _resolve_filesystem(root)
-            # use_threads=False everywhere: parallelism comes from Spark
-            # tasks; Arrow's default per-call thread pool (cpu_count
-            # threads in EVERY worker process) oversubscribes the box
-            # by n_workers x n_cpus and serializes the stage.
-            tables = [
-                pq.read_table(
-                    f"{base}/{p}", filesystem=filesystem, use_threads=False
+        # use_threads=False everywhere: parallelism comes from Spark
+        # tasks; Arrow's default per-call thread pool (cpu_count
+        # threads in EVERY worker process) oversubscribes the box by
+        # n_workers x n_cpus and serializes the stage.
+        cur = pa.concat_tables(
+            [
+                _conform(
+                    pq.read_table(
+                        f"{base}/{p}",
+                        filesystem=filesystem,
+                        use_threads=False,
+                        coerce_int96_timestamp_unit="us",
+                    ),
+                    write_schema,
                 )
                 for p in paths
             ]
-            # int64 -> nullable Int64 at the Arrow boundary: the default
-            # conversion renders int64-with-nulls as float64, which is
-            # already lossy above 2^53 before any downstream cast.
-            cur = pa.concat_tables(tables, promote_options="default").to_pandas(
-                use_threads=False,
-                types_mapper={pa.int64(): pd.Int64Dtype()}.get,
-            )
-            # old files may predate later-added columns
-            for c in payload_cols:
-                if c not in cur.columns:
-                    cur[c] = None
-        else:
-            cur = pd.DataFrame(columns=payload_cols)
+            or [write_schema.empty_table()]
+        )
+        keys = pa.Table.from_pandas(
+            winners[key_cols],
+            schema=pa.schema([write_schema.field(c) for c in key_cols]),
+            preserve_index=False,
+        )
+        hit = _key_mask(cur, keys, key_cols)
+        untouched = cur.filter(pc.invert(hit))
+        # int64 -> nullable Int64 at the Arrow boundary: the default
+        # conversion renders int64-with-nulls as float64, which is
+        # already lossy above 2^53 before any downstream cast.
+        cur = cur.filter(hit).to_pandas(
+            use_threads=False,
+            types_mapper={pa.int64(): pd.Int64Dtype()}.get,
+            coerce_temporal_nanoseconds=True,
+        )
+        for c in cur.columns:
+            if isinstance(cur[c].dtype, pd.DatetimeTZDtype):
+                cur[c] = cur[c].dt.tz_localize(None)  # naive UTC, as the delta
 
         # 4. arbitration (same rule as the JVM merge): delta wins iff no
         # current row or it is >= on the full lexicographic
         # (warc_ts, seq) tuple — the stored seq makes equal-ts events in
         # later epochs arbitrate by global LWW order, not arrival order.
         merged = winners.merge(
-            cur[payload_cols] if len(cur) else cur,
+            cur[payload_cols],
             on=key_cols,
             how="outer",
             suffixes=("", "_cur"),
             indicator=True,
         )
-        cur_ts = merged.get(f"{ts_col}_cur")
+        cur_ts = merged[f"{ts_col}_cur"]
         in_delta = merged["_merge"] != "right_only"
         has_cur = merged["_merge"] != "left_only"
         tb_col = order_cols[1] if len(order_cols) > 1 else None
         cur_tb = merged.get(f"{tb_col}_cur") if tb_col else None
-        if cur_ts is None:
-            delta_wins = in_delta
-        elif cur_tb is not None and tb_col in merged.columns:
+        if cur_tb is not None and tb_col in merged.columns:
             # null seq on EITHER side compares as -inf (classic-path
             # parity: ties with unknown seq go to the delta, and no
             # NaN comparison may silently drop a key). Both sides are
@@ -280,16 +418,45 @@ def make_bucket_merger(
         if keep_cur.any():
             cur_view = merged.loc[keep_cur].copy()
             for c in payload_cols:
-                cc = f"{c}_cur"
-                if cc in cur_view.columns:
-                    cur_view[c] = cur_view[cc]
+                if f"{c}_cur" in cur_view.columns:  # keys carry no suffix
+                    cur_view[c] = cur_view[f"{c}_cur"]
             parts.append(cur_view[payload_cols])
         if parts:
             out = pd.concat(parts, ignore_index=True)
         else:
             out = pd.DataFrame(columns=payload_cols)
         out[BUCKET_COL] = bucket
-        return _arrow_safe(out, schema)[out_cols]
+        changed = pa.Table.from_pandas(
+            _arrow_safe(out, schema)[out_cols],
+            schema=write_schema,
+            preserve_index=False,
+        ).replace_schema_metadata(None)
+
+        # 5. the whole bucket, clustered on event time (nulls first, as
+        # the JVM writer's sortWithinPartitions orders them), written
+        # as one file; the file record is all that returns to the JVM.
+        table = pa.concat_tables([changed, untouched])
+        if table.num_rows == 0:
+            return pd.DataFrame(columns=record_cols)
+        table = table.take(
+            pc.sort_indices(
+                table, [(ts_col, "ascending")], null_placement="at_start"
+            )
+        )
+        rel = (
+            f"{out_dir}/{PARTITION_DIR_COL}={bucket}/"
+            f"part-{bucket:05d}-{uuid.uuid4().hex}.parquet"
+        )
+        filesystem.create_dir(f"{base}/{rel.rsplit('/', 1)[0]}", recursive=True)
+        pq.write_table(
+            table,
+            f"{base}/{rel}",
+            filesystem=filesystem,
+            **_parquet_options(table, key_cols, order_cols),
+        )
+        return pd.DataFrame(
+            [_file_record(bucket, rel, table, ts_col)], columns=record_cols
+        )
 
     return merge_bucket
 
@@ -386,10 +553,10 @@ def merge_epoch_spj(
                 F.coalesce(F.col(c).try_cast("long"), F.lit(TB_SENTINEL)),
             )
     bucketed = delta.withColumn(BUCKET_COL, bucket_expr(key_cols, snap.n_buckets))
-    out_schema = T.StructType(
-        schema.fields + [T.StructField(BUCKET_COL, T.IntegerType(), False)]
-    )
     touched_files = {b: snap.files.get(str(b), []) for b in map(str, touched)}
+    # Claim the version first: the kernel writes the merged buckets
+    # under its data directory and returns only their file records.
+    version = table.claim_version()
     kernel = make_bucket_merger(
         table.root,
         spark.sparkContext.broadcast(touched_files),
@@ -397,14 +564,20 @@ def merge_epoch_spj(
         key_cols,
         order_cols,
         extracted,
+        out_dir=table.data_prefix(version),
     )
-    merged = bucketed.groupBy(BUCKET_COL).applyInPandas(kernel, out_schema)
+    records = [
+        FileRecord(*r)
+        for r in bucketed.groupBy(BUCKET_COL)
+        .applyInPandas(kernel, FILE_RECORD_SCHEMA)
+        .collect()
+    ]
 
     new_snap = table.commit(
-        merged,
+        records,
+        version=version,
         touched_buckets=touched,
         applied_epoch=epoch,
-        already_bucket_partitioned=True,
         # the LWW order column is the stream's event time: recording
         # per-bucket tombstone stats here is what lets expire_tombstones
         # prune its GC discovery scan to prunable buckets

@@ -205,10 +205,12 @@ def test_as_exact_int64_object_dtype_no_float_detour():
 
 
 def test_kernel_reads_current_side_through_fs_seam(spark, tmp_path):
-    """The executor-local current-side read goes through the pyarrow
-    FileSystem seam: a file:// URI root (stand-in for any object-store
-    URI) must produce the same merge output as the plain POSIX root."""
+    """The executor-local current-side read AND the bucket write go
+    through the pyarrow FileSystem seam: a file:// URI root (stand-in
+    for any object-store URI) must write the same merged bucket and
+    return the same file record as the plain POSIX root."""
     import pandas as pd
+    import pyarrow.parquet as pq
     from pyspark.sql import types as T
 
     from etl_spark.operators.merge_spj import (
@@ -256,13 +258,26 @@ def test_kernel_reads_current_side_through_fs_seam(spark, tmp_path):
             ["url"],
             ["warc_ts"],
             extracted=True,
+            out_dir=f"data/{label}",
         )
-        out = kernel(delta.copy())
-        outs[label] = sorted(
-            zip(out["url"], out["note"], out["_bucket"])
+        rec = kernel(delta.copy())
+        assert len(rec) == 1
+        rec = rec.iloc[0]
+        path = rec["path"]
+        assert path.startswith(f"data/{label}/_pb=0/")
+        written = pq.read_table(tmp_path / path).to_pandas()
+        assert rec["rows"] == len(written) == 2  # current carried + delta
+        assert (rec["ts_min"], rec["ts_max"]) == (
+            pd.Timestamp("2024-01-01"),
+            pd.Timestamp("2024-01-02"),
         )
-    assert outs["posix"] == outs["uri"]
-    assert len(outs["uri"]) == 2  # current row carried + delta applied
+        assert rec["n_tombstones"] is None  # no tombstone column
+        # written clustered on event time
+        outs[label] = list(zip(written["url"], written["note"], written["_bucket"]))
+    assert outs["posix"] == outs["uri"] == [
+        ("https://x.example/a", "old", 0),
+        ("https://x.example/b", "new", 0),
+    ]
 
     # seam resolution itself
     fs_posix, base_posix = _resolve_filesystem(str(tmp_path))

@@ -216,26 +216,27 @@ def _parquet_options(table, key_cols: list[str], order_cols: list[str]) -> dict:
     }
 
 
-def _file_record(bucket: int, path: str, table, ts_col: str) -> dict:
+def _file_record(bucket: int, path: str, table, ts_col: str | None) -> dict:
     """The commit's file record for a written table (see
     lake.table.FileRecord). Timestamps leave as naive UTC, which Spark
-    reads back in the session's (UTC) zone."""
+    reads back in the session's (UTC) zone. ``ts_col=None`` (the order
+    column is not a timestamp) gives a stats-unknown record."""
 
     def naive(scalar):
         v = scalar.as_py()
         return v.replace(tzinfo=None) if v is not None else None
 
+    rec = dict.fromkeys(f.name for f in FILE_RECORD_SCHEMA.fields)
+    rec.update(bucket=bucket, path=path)
+    if ts_col is None:
+        return rec
     ts = table[ts_col]
     bounds = pc.min_max(ts)
-    rec = {
-        "bucket": bucket,
-        "path": path,
-        "rows": table.num_rows,
-        "ts_min": naive(bounds["min"]),
-        "ts_max": naive(bounds["max"]),
-        "n_tombstones": None,
-        "min_tombstone_ts": None,
-    }
+    rec.update(
+        rows=table.num_rows,
+        ts_min=naive(bounds["min"]),
+        ts_max=naive(bounds["max"]),
+    )
     if DELETED_COL in table.column_names:
         dead = pc.fill_null(table[DELETED_COL], False)
         rec["n_tombstones"] = pc.sum(dead.cast(pa.int64())).as_py() or 0
@@ -269,6 +270,8 @@ def make_bucket_merger(
     out_cols = payload_cols + [BUCKET_COL]
     write_schema = _write_schema(schema)
     ts_col = order_cols[0]
+    # bounds are recorded over a timestamp order column only
+    stats_col = ts_col if pa.types.is_timestamp(write_schema.field(ts_col).type) else None
     record_cols = [f.name for f in FILE_RECORD_SCHEMA.fields]
 
     def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -455,7 +458,7 @@ def make_bucket_merger(
             **_parquet_options(table, key_cols, order_cols),
         )
         return pd.DataFrame(
-            [_file_record(bucket, rel, table, ts_col)], columns=record_cols
+            [_file_record(bucket, rel, table, stats_col)], columns=record_cols
         )
 
     return merge_bucket

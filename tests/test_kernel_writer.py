@@ -212,6 +212,31 @@ def test_spj_epoch_runs_no_stats_scan(spark, tmp_path, monkeypatch):
     assert wh.pages.read(spark).count() == 29
 
 
+def test_non_timestamp_order_column_records_unknown_stats(tmp_path):
+    """An order column that is not a timestamp gives stats-unknown file
+    records (as the JVM stats scan gives none), and the bucket is still
+    written clustered on it."""
+    import pandas as pd
+
+    from etl_spark.operators.merge_spj import make_bucket_merger
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), True),
+            T.StructField("v", T.LongType(), True),
+        ]
+    )
+    kernel = make_bucket_merger(
+        str(tmp_path), {}, schema, ["k"], ["v"], extracted=True, out_dir="data/v1"
+    )
+    out = kernel(pd.DataFrame({"k": ["a", "b"], "v": [2, 1], "_bucket": [0, 0]}))
+    rec = out.iloc[0]
+    assert rec["rows"] is None and rec["ts_min"] is None
+    assert rec["n_tombstones"] is None
+    written = pq.read_table(tmp_path / rec["path"]).to_pandas()
+    assert list(written["k"]) == ["b", "a"]
+
+
 # ---------------------------------------------------------------------------
 # Orphan-claim GC ages a claim from its last write, not its creation
 # ---------------------------------------------------------------------------

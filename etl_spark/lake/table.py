@@ -118,15 +118,23 @@ class FileRecord(NamedTuple):
 
 
 # Spark-side twin of FileRecord: the row shape a writer job returns.
+# Field names, order and nullability (a field with a default may be
+# None) come from FileRecord; only the Spark types are set here.
+_FILE_RECORD_TYPES = {
+    "bucket": T.IntegerType(),
+    "path": T.StringType(),
+    "rows": T.LongType(),
+    "ts_min": T.TimestampType(),
+    "ts_max": T.TimestampType(),
+    "n_tombstones": T.LongType(),
+    "min_tombstone_ts": T.TimestampType(),
+}
 FILE_RECORD_SCHEMA = T.StructType(
     [
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("path", T.StringType(), False),
-        T.StructField("rows", T.LongType(), True),
-        T.StructField("ts_min", T.TimestampType(), True),
-        T.StructField("ts_max", T.TimestampType(), True),
-        T.StructField("n_tombstones", T.LongType(), True),
-        T.StructField("min_tombstone_ts", T.TimestampType(), True),
+        T.StructField(
+            name, _FILE_RECORD_TYPES[name], name in FileRecord._field_defaults
+        )
+        for name in FileRecord._fields
     ]
 )
 
@@ -740,6 +748,7 @@ class LakeTable:
         new_data: DataFrame | list[FileRecord] | None,
         *,
         version: int | None = None,
+        base: Snapshot | None = None,
         touched_buckets: Iterable[int] | None = None,
         schema: T.StructType | None = None,
         applied_epoch: int | None = None,
@@ -762,6 +771,13 @@ class LakeTable:
           merge kernel). Files under that directory the records do not
           list are deleted before publishing.
 
+        ``base``: the snapshot the caller read the data it rewrites
+        from (default: the current head). A writer that read its
+        current side before its own write job ran (the SPJ merge)
+        passes that snapshot, so a commit that landed in between loses
+        the HEAD compare-and-swap and meets the write-write clash check
+        instead of being silently overwritten.
+
         ``new_data=None`` is a metadata-only commit (schema evolution,
         empty epochs).
 
@@ -780,7 +796,7 @@ class LakeTable:
         several time-consecutive files on the JVM writer (tighter
         pruning; Iceberg's target-file-size knob).
         """
-        head = self.snapshot()
+        head = base if base is not None else self.snapshot()
         if applied_epoch is not None and applied_epoch in head.applied_epochs:
             return head  # exactly-once: epoch already applied
         if isinstance(new_data, DataFrame):

@@ -6,9 +6,9 @@ key again), and the write repartition (hash by bucket). This variant
 collapses them into ONE payload shuffle, and the kernel writes the
 merged buckets itself:
 
-    claim version v
+    snap = current snapshot; claim version v
     delta.groupBy(bucket).applyInPandas(merge_bucket) -> file records
-    table.commit(records, version=v)
+    table.commit(records, version=v, base=snap)
 
 Inside the grouped-map kernel (one call per bucket, Arrow-batched):
   1. LWW winner per key (vectorized sort + drop_duplicates keep-last —
@@ -41,7 +41,10 @@ never crosses the Python->JVM boundary, the JVM neither sorts nor
 re-encodes it, and the commit takes the bounds and tombstone stats
 from the records instead of re-reading the written files. The commit
 deletes any file under ``data/v<v>`` that no record lists (leftovers
-of failed task attempts) before it publishes. Hot keys: when the stats
+of failed task attempts) before it publishes, and publishes against
+``snap`` — the snapshot the kernels read — so a commit that rewrote a
+touched bucket while the job ran makes this one raise
+CommitConflictError instead of being overwritten. Hot keys: when the stats
 pre-pass sees a key above threshold, a JVM salted pre-reduce runs
 BEFORE the grouped map so no pandas group ever materializes a hot
 key's full row set.
@@ -570,7 +573,7 @@ def merge_epoch_spj(
         out_dir=table.data_prefix(version),
     )
     records = [
-        FileRecord(*r)
+        FileRecord(**r.asDict())
         for r in bucketed.groupBy(BUCKET_COL)
         .applyInPandas(kernel, FILE_RECORD_SCHEMA)
         .collect()
@@ -579,6 +582,10 @@ def merge_epoch_spj(
     new_snap = table.commit(
         records,
         version=version,
+        # the snapshot the kernel merged against: a same-bucket commit
+        # that landed while the job ran must fail the publish, not be
+        # overwritten by output merged from the older files
+        base=snap,
         touched_buckets=touched,
         applied_epoch=epoch,
         # the LWW order column is the stream's event time: recording

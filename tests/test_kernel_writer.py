@@ -13,10 +13,11 @@ import os
 import time
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_spark.lake.table import LakeTable
+from etl_spark.lake.table import CommitConflictError, LakeTable
 from etl_spark.operators.merge_spj import merge_epoch_spj
 from etl_spark.pipeline import Warehouse, ingest_epoch
 
@@ -191,6 +192,42 @@ def test_unlisted_files_are_deleted_before_publish(spark, tmp_path, monkeypatch)
     live = {p for plist in snap.files.values() for p in plist}
     assert all(os.path.exists(os.path.join(pages.root, p)) for p in live)
     assert pages.read(spark).count() == 20
+
+
+def test_same_bucket_commit_during_merge_job_fails_loudly(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that rewrites a bucket while the SPJ merge job runs
+    makes the merge's publish raise: its output was merged against the
+    files it read before the job, so publishing it would silently drop
+    the winner's rows."""
+    wh = Warehouse.init(str(tmp_path / "wh"), n_buckets=1)
+    pages = wh.pages
+    merge_epoch_spj(spark, pages, _changes(spark, _inserts(0, 10)), 0)
+    winner = _changes(spark, _inserts(1, 1, seq0=200))
+    winner = winner.withColumn("url", F.lit("https://x.example/winner"))
+    loser = _changes(spark, _inserts(2, 1, seq0=300))
+    loser = loser.withColumn("url", F.lit("https://x.example/loser"))
+    claim = LakeTable.claim_version
+    raced = []
+
+    def claim_then_race(self):
+        v = claim(self)
+        if not raced:  # the loser's claim: the winner lands before its job
+            raced.append(v)
+            merge_epoch_spj(spark, pages, winner, 1)
+        return v
+
+    monkeypatch.setattr(LakeTable, "claim_version", claim_then_race)
+    with pytest.raises(CommitConflictError):
+        merge_epoch_spj(spark, pages, loser, 2)
+    monkeypatch.undo()
+
+    urls = {r.url for r in pages.read(spark).collect()}
+    assert "https://x.example/winner" in urls
+    assert "https://x.example/loser" not in urls
+    assert len(urls) == 11
+    assert pages.applied_epochs() == {0, 1}
 
 
 def test_spj_epoch_runs_no_stats_scan(spark, tmp_path, monkeypatch):
